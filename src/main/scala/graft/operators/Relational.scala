@@ -304,10 +304,23 @@ object Relational {
   private val micros1997 =
     java.time.LocalDate.of(1997, 1, 1).toEpochDay * 86400L * 1000000L
 
+  /** Source maxima of the slice-bound columns. The ensured layout at
+    * `loc` holds exactly the source's rows (its stamp matches the
+    * source), so its manifest hulls answer without a scan; a manifest
+    * that cannot (census mismatch, a hull missing) falls back to one
+    * eager aggregate over the source. */
+  private def sliceMaxes(s: SparkSession, d: String, loc: String,
+                         cols: Seq[String]): Seq[Long] =
+    graft.sources.StatsManifest.columnMax(loc, cols).getOrElse {
+      val b = lineitem(s, d).agg(max(col(cols.head)),
+        cols.tail.map(c => max(col(c))): _*).head()
+      cols.indices.map(b.getLong)
+    }
+
   val q74_zorder_slice: Q = (s, d) => {
     val loc = graft.sources.ZOrderLayout.ensureLineitem(s, d)
     // same bound the oracle derives with MAX()//8 — exact integer division
-    val maxPk = lineitem(s, d).agg(max(col("l_partkey"))).head().getLong(0)
+    val maxPk = sliceMaxes(s, d, loc, Seq("l_partkey")).head
     // manifest-pruned: the file-level must-read set comes from ONE
     // _stats_manifest read instead of O(files) plan-time footer reads
     // (StatsManifest scaladoc; the full row-level filter below is still
@@ -341,9 +354,7 @@ object Relational {
   val q77_hilbert_slice: Q = (s, d) => {
     val loc = graft.sources.HilbertLayout.ensureLineitem3(s, d)
     // same bounds the oracle derives with MAX()//k — exact integer division
-    val b = lineitem(s, d)
-      .agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
-    val (maxPk, maxSk) = (b.getLong(0), b.getLong(1))
+    val Seq(maxPk, maxSk) = sliceMaxes(s, d, loc, Seq("l_partkey", "l_suppkey"))
     // manifest-pruned on all three clustered dimensions (see q74)
     graft.sources.StatsManifest.prunedScan(s, loc, Seq(
         graft.sources.StatsManifest.Range("l_partkey", None, Some(maxPk / 8)),

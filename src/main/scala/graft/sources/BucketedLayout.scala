@@ -40,9 +40,10 @@ import org.apache.spark.sql.functions.col
   * layout maintains like the CoW snapshot does:
   *
   *  - [[appendDelta]] routes ONLY the new rows to their buckets — the
-  *    delta is pre-partitioned by the bucketer's hash and appended, so
-  *    each touched bucket gains one delta file (cost O(delta), measured
-  *    in EXPLAIN_r13). Multi-file buckets are already the reader
+  *    delta is pre-partitioned by the bucketer's hash at a write width
+  *    that divides `buckets`, so every bucket still lands in exactly one
+  *    task and each touched bucket gains one delta file (cost O(delta),
+  *    measured in EXPLAIN_r13). Multi-file buckets are already the reader
   *    contract (scan partitioning is per bucket ID, not per file; sort
   *    order was never assumed — see above), so gated plans keep their
   *    zero-Exchange shape unchanged.
@@ -216,9 +217,14 @@ object BucketedLayout {
 
   /** Append `delta` to the persisted layout, routing each row to its
     * bucket — the O(delta) ingest path. Each touched bucket gains one
-    * delta file (the delta is pre-partitioned by the bucketer's hash, so
-    * a write task holds exactly one bucket); untouched buckets are not
-    * rewritten. Advances the recorded source stamp to the CURRENT source:
+    * delta file; untouched buckets are not rewritten. The write width
+    * divides `buckets` ([[appendWidth]]): the delta is pre-partitioned by
+    * the bucketer's own hash into k | buckets tasks, and since
+    * pmod(h, buckets) mod k = pmod(h, k), every bucket lands in exactly
+    * one task — the files are those a `buckets`-wide write makes, from
+    * k tasks instead of `buckets` (a small delta does not pay a task per
+    * bucket). The stats manifest refresh reads only the new files'
+    * footers. Advances the recorded source stamp to the CURRENT source:
     * the caller's contract is that `delta` is exactly the rows appended
     * to the source since the layout's recorded stamp (the same contract a
     * CDC consumer keeps — BucketedIncrementSpec pins merged ≡ rebuilt by
@@ -240,7 +246,8 @@ object BucketedLayout {
     finishPendingCompact(loc)
     if (!s.catalog.tableExists(name)) registerDdl(s, name, key, buckets, loc)
     delta
-      .repartition(buckets, col(key))
+      .repartition(appendWidth(buckets,
+        s.conf.get("spark.sql.shuffle.partitions").toInt), col(key))
       .write.mode("append")
       .bucketBy(buckets, key).sortBy(key)
       .option("path", loc)
@@ -277,6 +284,14 @@ object BucketedLayout {
     s.catalog.refreshTable(name)
     name
   }
+
+  /** Write width of [[appendDelta]]: the largest divisor of `buckets`
+    * not above `maxTasks` (the session's shuffle partitions), so each
+    * bucket maps to exactly one write task. [[ensureTable]] keeps the
+    * full `buckets`-wide build. */
+  private def appendWidth(buckets: Int, maxTasks: Int): Int =
+    (1 to buckets).filter(k => buckets % k == 0 && k <= maxTasks)
+      .lastOption.getOrElse(1)
 
   /** Compaction POLICY (round 14, VERDICT r13 #2): fold delta files back
     * when any bucket's file count exceeds `graft.bucketed.maxFilesPerBucket`

@@ -39,32 +39,34 @@ object HilbertLayout {
           (((1L << bits) - 1).toDouble / (hi - lo).toDouble)).cast(LongType)
 
   /** Write `df` Hilbert-clustered on the (long-valued) dimension columns:
-    * one tiny bounds agg, rank each dim, range-partition by the curve
-    * index so each output file covers one contiguous curve range = one
-    * tight box of the k-dim space, sort within for row-group stats, drop
-    * the key. Timestamps forced to stats-bearing TIMESTAMP_MICROS for
-    * this write (the layout IS those stats), as in ZOrderLayout. */
+    * one tiny aggregate takes the row count and every dim's bounds
+    * together, rank each dim, range-partition by the curve index so each
+    * output file covers one contiguous curve range = one tight box of the
+    * k-dim space, sort within for row-group stats, drop the key. `files`
+    * sizes the write from the row count; zero rows write nothing.
+    * Timestamps forced to stats-bearing TIMESTAMP_MICROS for this write
+    * (the layout IS those stats) through ZOrderLayout's shared scope. */
   def writeHilbert(df: DataFrame, dims: Seq[Column], out: String,
-                   files: Int): Unit = {
+                   files: Long => Int): Unit = {
     graft.functions.HilbertIdx.register(df.sparkSession)
     val aggs = dims.flatMap(d =>
       Seq(min(d.cast(LongType)), max(d.cast(LongType))))
-    val bounds = df.agg(aggs.head, aggs.tail: _*).head()
-    val ranked = dims.zipWithIndex.map { case (d, i) =>
-      rank(d.cast(LongType), bounds.getLong(2 * i), bounds.getLong(2 * i + 1),
-           BitsPerDim)
+    val bounds = df.agg(count(lit(1)), aggs: _*).head()
+    val rows = bounds.getLong(0)
+    if (rows > 0) {
+      val ranked = dims.zipWithIndex.map { case (d, i) =>
+        rank(d.cast(LongType), bounds.getLong(2 * i + 1),
+             bounds.getLong(2 * i + 2), BitsPerDim)
+      }
+      val h = graft.functions.HilbertIdx.hilbert_idx(BitsPerDim, ranked: _*)
+      ZOrderLayout.withMicrosTimestamps(df.sparkSession) {
+        df.withColumn("__h", h)
+          .repartitionByRange(files(rows), col("__h"))
+          .sortWithinPartitions("__h")
+          .drop("__h")
+          .write.mode("overwrite").parquet(out)
+      }
     }
-    val h = graft.functions.HilbertIdx.hilbert_idx(BitsPerDim, ranked: _*)
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = conf.get(key)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try df.withColumn("__h", h)
-      .repartitionByRange(files, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-      .write.mode("overwrite").parquet(out)
-    finally conf.set(key, prev)
   }
 
   /** Content address: source + algo only — ZOrderLayout's r13 rationale
@@ -108,7 +110,7 @@ object HilbertLayout {
     } else {
       val dir = Paths.get(loc)
       if (Files.exists(dir)) graft.Fs.deleteTree(dir) // stale or partial
-      writeHilbert(graft.Tables.lineitem(s, sfDir), dims3, loc, files)
+      writeHilbert(graft.Tables.lineitem(s, sfDir), dims3, loc, _ => files)
       StatsManifest.write(s, loc, StatsCols)
       // the freshly-clustered tightness IS the recluster policy's floor;
       // the domains recorded WITH it anchor the live metric's denominator
@@ -125,9 +127,12 @@ object HilbertLayout {
 
   /** O(delta) maintenance — [[ZOrderLayout.appendDeltaLineitem]]'s shape
     * on the 3-dim curve: delta clustered among itself, files moved in,
-    * manifest refreshed (true hulls → pruning stays correct), stamp
-    * advanced LAST so every crash point degrades to rebuild or to the
-    * loud unpruned fallback, never to wrong. */
+    * manifest refreshed (only the new files' footers read; true hulls →
+    * pruning stays correct), stamp advanced LAST so every crash point
+    * degrades to rebuild or to the loud unpruned fallback, never to
+    * wrong. The delta's row count rides in the curve-bounds aggregate (no
+    * separate count pass); a zero-row delta writes no file and still
+    * passes the guard and the stamp advance. */
   def appendDeltaLineitem3(s: SparkSession, sfDir: String,
                            delta: org.apache.spark.sql.DataFrame): Unit =
     synchronized {
@@ -138,11 +143,10 @@ object HilbertLayout {
       val rowsPerFile = math.max(1L,
         if (entries.isEmpty) Long.MaxValue
         else entries.map(_.rows).sum / entries.size)
-      val deltaRows = delta.count()
-      val files = math.max(1, math.ceil(deltaRows.toDouble / rowsPerFile).toInt)
       val tmp = s"$loc/.append_tmp"
       graft.Fs.deleteTree(Paths.get(tmp))
-      writeHilbert(delta, dims3, tmp, files)
+      writeHilbert(delta, dims3, tmp,
+        rows => math.max(1, math.ceil(rows.toDouble / rowsPerFile).toInt))
       Option(new java.io.File(tmp).listFiles).toSeq.flatten
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .foreach(f => Files.move(f.toPath, Paths.get(s"$loc/${f.getName}")))

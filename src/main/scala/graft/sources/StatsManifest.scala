@@ -40,9 +40,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan, loudly, on any mismatch: stale pruning degrades to correct-but-
   * unpruned, never to wrong.
   *
-  * The stats themselves are read DISTRIBUTED at build time (executors
-  * open footers via parquet-hadoop), so manifest construction scales with
-  * the cluster, not the driver.
+  * REFRESH RULE: every rewrite keeps the previous manifest's entry of each
+  * listed file whose name and byte length still match the live file (and
+  * which carries a hull for every tracked column) unchanged, and reads
+  * footers only for files that are new or whose size changed; entries of
+  * removed files drop out. An append therefore costs O(new files), not
+  * O(layout). The footer reads that remain run DISTRIBUTED in one stage
+  * (executors open footers via parquet-hadoop, one Hadoop Configuration
+  * per task), so manifest construction scales with the cluster, not the
+  * driver; a refresh with nothing new to read runs no job at all.
   */
 object StatsManifest {
 
@@ -60,9 +66,9 @@ object StatsManifest {
   /** Footer min/max of the requested columns for one parquet file, as
     * longs (INT32 widened; INT64 as-is — covers ids, DATE epoch-days,
     * TIMESTAMP_MICROS epoch-micros). Runs on EXECUTORS at build time. */
-  private def footerEntry(file: java.io.File, cols: Seq[String]): Entry = {
-    val in = HadoopInputFile.fromPath(new Path(file.getAbsolutePath),
-                                      new Configuration())
+  private def footerEntry(rel: String, file: java.io.File, cols: Seq[String],
+                          conf: Configuration): Entry = {
+    val in = HadoopInputFile.fromPath(new Path(file.getAbsolutePath), conf)
     val r = ParquetFileReader.open(in)
     try {
       val blocks = r.getFooter.getBlocks.asScala
@@ -90,7 +96,7 @@ object StatsManifest {
           Some(c -> ((perBlock.map(_._1).min, perBlock.map(_._2).max)))
         else None
       }.toMap
-      Entry(file.getName, file.length(), rows, stats)
+      Entry(rel, file.length(), rows, stats)
     } finally r.close()
   }
 
@@ -111,27 +117,49 @@ object StatsManifest {
       .flatMap(c => walk(c, c.getName)).sortBy(_._1)
   }
 
-  /** Build (or rebuild) the manifest for the layout at `dir`, tracking
-    * `cols`. Footer reads run distributed; the tiny result set collects
-    * to the driver (one row per FILE — bounded by layout file count, the
-    * same cardinality the manifest itself holds). Written atomically
-    * (temp + move) so readers never see a torn manifest. */
-  def write(s: SparkSession, dir: String, cols: Seq[String]): Unit = {
+  /** What one [[write]] did: entries carried over from the previous
+    * manifest, and footers read (new or resized files). `read` is the
+    * O(delta) tripwire — an append must read exactly its own files. */
+  final case class Refresh(reused: Int, read: Int)
+
+  /** Write (or refresh) the manifest for the layout at `dir`, tracking
+    * `cols`, under the refresh rule in the module scaladoc. Footer reads
+    * run distributed in ONE stage over min(files to read,
+    * defaultParallelism) tasks; the tiny result set collects to the
+    * driver (one row per FILE — bounded by layout file count, the same
+    * cardinality the manifest itself holds). Written atomically (temp +
+    * move) so readers never see a torn manifest. */
+  def write(s: SparkSession, dir: String, cols: Seq[String]): Refresh = {
     val files = dataFiles(dir)
-    if (files.isEmpty) return
-    val paths = files.map { case (rel, f) => (rel, f.getAbsolutePath) }
-    import s.implicits._
-    val colsB = cols // stable local for the closure
-    val entries = s.createDataset(paths)
-      .repartition(math.min(paths.size, 32))
-      .map { case (rel, p) =>
-        render(footerEntry(new java.io.File(p), colsB).copy(name = rel)) }
-      .collect()
-      .sorted
+    if (files.isEmpty) return Refresh(0, 0)
+    val previous = read(dir).getOrElse(Nil).map(e => e.name -> e).toMap
+    val kept = files.flatMap { case (rel, f) =>
+      previous.get(rel)
+        .filter(e => e.bytes == f.length && cols.forall(e.stats.contains))
+        .map(e => e.copy(stats = e.stats.filter { case (c, _) => cols.contains(c) }))
+    }
+    val keptNames = kept.map(_.name).toSet
+    val toRead = files.collect { case (rel, f) if !keptNames(rel) =>
+      (rel, f.getAbsolutePath) }
+    val fresh =
+      if (toRead.isEmpty) Seq.empty[Entry]
+      else {
+        val colsB = cols // stable local for the closure
+        s.sparkContext
+          .parallelize(toRead, math.min(toRead.size, s.sparkContext.defaultParallelism))
+          .mapPartitions { it =>
+            val conf = new Configuration()
+            it.map { case (rel, p) =>
+              footerEntry(rel, new java.io.File(p), colsB, conf) }
+          }
+          .collect().toSeq
+      }
+    val lines = (kept ++ fresh).map(render).sorted
     val tmp = Paths.get(s"$dir/.${FileName}.tmp")
-    Files.writeString(tmp, entries.mkString("", "\n", "\n"))
+    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
     Files.move(tmp, Paths.get(s"$dir/$FileName"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    Refresh(kept.size, fresh.size)
   }
 
   private def render(e: Entry): String = {
@@ -237,6 +265,21 @@ object StatsManifest {
       }
     }.map(_.name)
 
+  /** The manifest lists exactly the live directory's data files — the
+    * precondition for trusting it in place of the files themselves. */
+  private def censusMatches(dir: String, entries: Seq[Entry]): Boolean =
+    entries.map(_.name).sorted == dataFiles(dir).map(_._1)
+
+  /** Exact maxima of `cols` over the layout at `dir`, from the manifest's
+    * file hulls alone (footer min/max of integral columns are exact, so
+    * the max of the file maxima IS the column max). `None` — the caller
+    * scans instead — unless the manifest's census matches the live
+    * directory and every entry carries a hull for every column. */
+  def columnMax(dir: String, cols: Seq[String]): Option[Seq[Long]] =
+    read(dir).filter(es => es.nonEmpty && censusMatches(dir, es) &&
+        es.forall(e => cols.forall(e.stats.contains)))
+      .map(es => cols.map(c => es.map(_.stats(c)._2).max))
+
   /** Manifest-pruned scan of the layout at `dir`: reads ONLY the files
     * whose stats hull intersects every predicate. The caller must still
     * apply the full row-level filter (manifest pruning is file-granular;
@@ -252,8 +295,7 @@ object StatsManifest {
     * (one relation instead of N file paths in the plan). */
   def prunedScan(s: SparkSession, dir: String, preds: Seq[Range]): DataFrame =
     read(dir) match {
-      case Some(entries)
-          if entries.map(_.name).sorted == dataFiles(dir).map(_._1) =>
+      case Some(entries) if censusMatches(dir, entries) =>
         val keep = mustRead(entries, preds)
         if (keep.size == entries.size) s.read.parquet(dir)
         // empty must-read: schema still needed — scan the dir with an

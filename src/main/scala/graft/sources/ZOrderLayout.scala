@@ -63,29 +63,60 @@ object ZOrderLayout {
       .bitwiseOR(shiftleft(spread16(rank16(b, bLo, bHi)), 1))
 
   /** Write `df` z-clustered on the two (long-valued) dimension columns:
-    * one tiny bounds agg, range-partition by the z-value so each output
-    * file covers one contiguous z-range = one small rectangle of the
-    * (A, B) plane, sort within for tight row-group stats, drop the key.
-    * Timestamps are forced to stats-bearing standard TIMESTAMP_MICROS for
-    * this write (INT96 carries no footer min/max — the whole point of the
-    * layout is those stats). */
+    * one tiny aggregate takes the row count and the bounds together,
+    * range-partition by the z-value so each output file covers one
+    * contiguous z-range = one small rectangle of the (A, B) plane, sort
+    * within for tight row-group stats, drop the key. `files` sizes the
+    * write from the row count; zero rows write nothing (no bounds exist
+    * to rank against). Timestamps are forced to stats-bearing standard
+    * TIMESTAMP_MICROS for this write (INT96 carries no footer min/max —
+    * the whole point of the layout is those stats). */
   def writeZOrdered(df: DataFrame, dimA: Column, dimB: Column,
-                    out: String, files: Int): Unit = {
-    val bounds = df.agg(
-      min(dimA.cast(LongType)), max(dimA.cast(LongType)),
-      min(dimB.cast(LongType)), max(dimB.cast(LongType))).head()
-    val z = zval(dimA.cast(LongType), bounds.getLong(0), bounds.getLong(1),
-                 dimB.cast(LongType), bounds.getLong(2), bounds.getLong(3))
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = conf.get(key)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try df.withColumn("__z", z)
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(out)
-    finally conf.set(key, prev)
+                    out: String, files: Long => Int): Unit = {
+    val (a, b) = (dimA.cast(LongType), dimB.cast(LongType))
+    val bounds = df.agg(count(lit(1)), min(a), max(a), min(b), max(b)).head()
+    val rows = bounds.getLong(0)
+    if (rows > 0) {
+      val z = zval(a, bounds.getLong(1), bounds.getLong(2),
+                   b, bounds.getLong(3), bounds.getLong(4))
+      withMicrosTimestamps(df.sparkSession) {
+        df.withColumn("__z", z)
+          .repartitionByRange(files(rows), col("__z"))
+          .sortWithinPartitions("__z")
+          .drop("__z")
+          .write.mode("overwrite").parquet(out)
+      }
+    }
+  }
+
+  private val TsKey = "spark.sql.parquet.outputTimestampType"
+  /** Per session: writers inside [[withMicrosTimestamps]], and the value
+    * the first of them found. */
+  private val tsScopes =
+    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
+
+  /** Run `f` with the session's parquet timestamp type at
+    * TIMESTAMP_MICROS — the shared scope of the z-order and Hilbert
+    * writers. The setting is session-wide, so concurrent writers share
+    * one scope under one lock: the first writer in saves the session's
+    * value and sets MICROS, the last writer out restores the saved value
+    * (a per-writer save/restore lets an overlapping second writer save
+    * the first one's MICROS and restore it last, for good). */
+  private[sources] def withMicrosTimestamps[T](s: SparkSession)(f: => T): T = {
+    tsScopes.synchronized {
+      val (n, saved) = Option(tsScopes.get(s)).getOrElse((0, s.conf.getOption(TsKey)))
+      if (n == 0) s.conf.set(TsKey, "TIMESTAMP_MICROS")
+      tsScopes.put(s, (n + 1, saved))
+    }
+    try f
+    finally tsScopes.synchronized {
+      val (n, saved) = tsScopes.get(s)
+      if (n > 1) tsScopes.put(s, (n - 1, saved))
+      else {
+        tsScopes.remove(s)
+        saved.fold(s.conf.unset(TsKey))(s.conf.set(TsKey, _))
+      }
+    }
   }
 
   /** Epoch-day rank dimension for a timestamp column (build-time only). */
@@ -139,7 +170,7 @@ object ZOrderLayout {
       val dir = Paths.get(loc)
       if (Files.exists(dir)) graft.Fs.deleteTree(dir) // stale or partial
       writeZOrdered(graft.Tables.lineitem(s, sfDir),
-        col("l_partkey"), dayOf(col("l_shipdate")), loc, files)
+        col("l_partkey"), dayOf(col("l_shipdate")), loc, _ => files)
       StatsManifest.write(s, loc, StatsCols)
       // the freshly-clustered tightness IS the recluster policy's floor;
       // the domains recorded WITH it anchor the live metric's denominator
@@ -157,15 +188,19 @@ object ZOrderLayout {
   /** O(delta) maintenance for the z-ordered copy: cluster the DELTA rows
     * among themselves (own bounds — placement only) into
     * row-count-proportional new files, move them in, refresh the stats
-    * manifest (the new files' hulls are true, so pruning stays correct —
-    * merely less tight than a full recluster), and advance the source
+    * manifest (only the new files' footers are read; their hulls are
+    * true, so pruning stays correct — merely less tight than a full
+    * recluster), and advance the source
     * stamp LAST (a crash before it leaves the stamp old → next ensure
     * rebuilds; a crash between the file move and the manifest leaves a
     * census mismatch → prunedScan falls back to the full scan, loudly —
     * every crash point degrades to correct). Caller contract matches
     * BucketedLayout.appendDelta: `delta` is exactly the rows added to
-    * the source since the recorded stamp. Periodic full recluster =
-    * [[recluster]]. */
+    * the source since the recorded stamp. The delta is read twice: one
+    * aggregate takes its row count (which sizes the write) together with
+    * the curve bounds, then the clustered write; a zero-row delta writes
+    * no file and still passes the guard and the stamp advance. Periodic
+    * full recluster = [[recluster]]. */
   def appendDeltaLineitem(s: SparkSession, sfDir: String,
                           delta: org.apache.spark.sql.DataFrame): Unit =
     synchronized {
@@ -177,12 +212,10 @@ object ZOrderLayout {
       val rowsPerFile = math.max(1L,
         if (entries.isEmpty) Long.MaxValue
         else entries.map(_.rows).sum / entries.size)
-      val deltaRows = delta.count()
-      val files = math.max(1, math.ceil(deltaRows.toDouble / rowsPerFile).toInt)
       val tmp = s"$loc/.append_tmp"
       graft.Fs.deleteTree(Paths.get(tmp))
       writeZOrdered(delta, col("l_partkey"), dayOf(col("l_shipdate")),
-        tmp, files)
+        tmp, rows => math.max(1, math.ceil(rows.toDouble / rowsPerFile).toInt))
       Option(new java.io.File(tmp).listFiles).toSeq.flatten
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .foreach(f => Files.move(f.toPath, Paths.get(s"$loc/${f.getName}")))

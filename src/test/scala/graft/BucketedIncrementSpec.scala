@@ -244,4 +244,43 @@ class BucketedIncrementSpec extends AnyFunSuite {
       assert(BucketedLayout.maintain(spark, src, "lineitem", "l_orderkey").isEmpty)
     } finally spark.conf.unset("graft.bucketed.maxFilesPerBucket")
   }
+
+  private def locOf(name: String): String =
+    spark.sql(s"DESCRIBE TABLE EXTENDED $name")
+      .filter(col("col_name") === "Location").select("data_type")
+      .head.getString(0).stripPrefix("file:")
+
+  /** Data files per bucket id (the id rides in the file name). */
+  private def filesPerBucket(loc: String): Map[Int, Int] =
+    new java.io.File(loc).listFiles().toSeq
+      .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(f => "_(\\d{5})\\.".r.findFirstMatchIn(f.getName).get.group(1).toInt)
+      .groupBy(identity).map { case (b, fs) => (b, fs.size) }
+
+  test("appendDelta at any shuffle width: at most one new file per bucket, merged ≡ rebuild") {
+    // the append writes at the largest divisor of Buckets not above the
+    // shuffle partitions (3 → 2, 4 → 4, 8 → 8, 200 → 32 tasks); every
+    // bucket must still land in exactly one task
+    val oracleSrc = freshSource("width_oracle", base.union(delta))
+    val oracle = allRows(layoutDf(
+      BucketedLayout.ensureTable(spark, oracleSrc, "lineitem", "l_orderkey")))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try for (width <- Seq(3, 4, 8, 200)) {
+      spark.conf.set(key, width.toString)
+      val src = freshSource(s"width_$width", base)
+      val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
+      val before = filesPerBucket(locOf(name))
+      delta.write.mode("append").parquet(s"$src/lineitem.parquet")
+      Tables.clearCaches()
+      BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta)
+      val after = filesPerBucket(locOf(name))
+      assert(after.values.sum > before.values.sum, s"width $width: no delta file")
+      for ((b, n) <- after)
+        assert(n - before.getOrElse(b, 0) <= 1,
+          s"width $width: bucket $b gained ${n - before.getOrElse(b, 0)} files")
+      assert(allRows(layoutDf(name)) == oracle, s"width $width: merged ≠ rebuild")
+    } finally spark.conf.set(key, prev)
+  }
 }

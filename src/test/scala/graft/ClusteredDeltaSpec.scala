@@ -232,4 +232,39 @@ class ClusteredDeltaSpec extends AnyFunSuite {
         !f.getName.startsWith(".") && !f.getName.startsWith("_"))
     assert(entries.size == live)
   }
+
+  private def liveFiles(loc: String): Set[String] =
+    new java.io.File(loc).listFiles()
+      .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.getName).toSet
+
+  /** A zero-row delta (an ingest day with nothing new) must be a no-op
+    * append: no file written, the guard passes, the stamp stays current
+    * (the next ensure serves the same files instead of rebuilding). */
+  private def emptyDeltaIsNoop(tag: String, ensure: String => String,
+                               append: (String, DataFrame) => Unit): Unit = {
+    val src = freshSource(tag, base)
+    val loc = ensure(src)
+    val files = liveFiles(loc)
+    val manifest = StatsManifest.read(loc).get
+    append(src, delta.filter(lit(false)))
+    assert(liveFiles(loc) == files, "a zero-row delta must write no file")
+    assert(StatsManifest.read(loc).get == manifest)
+    assert(ensure(src) == loc)
+    assert(liveFiles(loc) == files, "the stamp must stay current: no rebuild")
+    def key(r: org.apache.spark.sql.Row) = r.mkString("|")
+    assert(spark.read.parquet(loc).collect().map(key).sorted.toSeq ==
+      base.collect().map(key).sorted.toSeq)
+  }
+
+  test("z-order appendDelta: a zero-row delta writes nothing and keeps the stamp") {
+    emptyDeltaIsNoop("zempty", ZOrderLayout.ensureLineitem(spark, _),
+      ZOrderLayout.appendDeltaLineitem(spark, _, _))
+  }
+
+  test("hilbert appendDelta: a zero-row delta writes nothing and keeps the stamp") {
+    emptyDeltaIsNoop("hempty", HilbertLayout.ensureLineitem3(spark, _),
+      HilbertLayout.appendDeltaLineitem3(spark, _, _))
+  }
 }

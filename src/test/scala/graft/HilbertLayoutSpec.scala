@@ -101,11 +101,11 @@ class HilbertLayoutSpec extends AnyFunSuite {
     val hDir = java.nio.file.Files.createTempDirectory("graft_hil").toString + "/li"
     HilbertLayout.writeHilbert(li,
       Seq(col("l_partkey"), ZOrderLayout.dayOf(col("l_shipdate")),
-          col("l_suppkey")), hDir, nFiles)
+          col("l_suppkey")), hDir, _ => nFiles)
     // the comparison twin: the existing 2-dim z-order at the same file count
     val zDir = java.nio.file.Files.createTempDirectory("graft_hil_z").toString + "/li"
     ZOrderLayout.writeZOrdered(li, col("l_partkey"),
-      ZOrderLayout.dayOf(col("l_shipdate")), zDir, nFiles)
+      ZOrderLayout.dayOf(col("l_shipdate")), zDir, _ => nFiles)
 
     assert(files(hDir).size > 8, "too few files for a pruning audit")
     val bounds = li.agg(min("l_partkey"), max("l_partkey"),

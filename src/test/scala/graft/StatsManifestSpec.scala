@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{HilbertLayout, StatsManifest, ZOrderLayout}
+import graft.sources.{BucketedLayout, HilbertLayout, StatsManifest, ZOrderLayout}
 import graft.sources.StatsManifest.Range
 
 /** The persisted file-stats manifest must be a faithful stand-in for
@@ -162,5 +162,106 @@ class StatsManifestSpec extends AnyFunSuite {
     assert(q74 == slice(lit(true)))
     assert(q77 == slice(col("l_suppkey") <= lit(maxSk / 4)))
     assert(q74.nonEmpty && q77.nonEmpty)
+  }
+
+  // ------------------------------------------------ incremental refresh
+
+  private def manifestLines(dir: String): Seq[String] =
+    Files.readAllLines(Paths.get(s"$dir/${StatsManifest.FileName}")).asScala.toSeq
+
+  /** The manifest a from-scratch write produces for `dir` (every footer
+    * read); the kept manifest is restored afterwards. */
+  private def rebuiltLines(dir: String, cols: Seq[String]): Seq[String] = {
+    val m = Paths.get(s"$dir/${StatsManifest.FileName}")
+    val kept = Files.readString(m)
+    Files.delete(m)
+    try {
+      val r = StatsManifest.write(spark, dir, cols)
+      assert(r.reused == 0)
+      manifestLines(dir)
+    } finally Files.writeString(m, kept)
+  }
+
+  /** A throwaway source dir holding `df` as its lineitem table. */
+  private def tempSource(df: org.apache.spark.sql.DataFrame): String = {
+    val d = Files.createTempDirectory("graft_manifest_src").toString
+    df.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+    Tables.clearCaches()
+    d
+  }
+
+  test("after bucketed, z-order and Hilbert appends the kept manifest equals a rebuild, line for line") {
+    val li = Tables.lineitem(spark, sf)
+    val base = li.filter(col("l_orderkey") % 10 =!= 0)
+    val delta = li.filter(col("l_orderkey") % 10 === 0)
+    def ingest(src: String): Unit = {
+      delta.write.mode("append").parquet(s"$src/lineitem.parquet")
+      Tables.clearCaches()
+    }
+    val bSrc = tempSource(base)
+    val name = BucketedLayout.ensureTable(spark, bSrc, "lineitem", "l_orderkey")
+    ingest(bSrc)
+    BucketedLayout.appendDelta(spark, bSrc, "lineitem", "l_orderkey", delta)
+    val bLoc = spark.sql(s"DESCRIBE TABLE EXTENDED $name")
+      .filter(col("col_name") === "Location").select("data_type")
+      .head.getString(0).stripPrefix("file:")
+    val zSrc = tempSource(base)
+    val zLoc = ZOrderLayout.ensureLineitem(spark, zSrc)
+    ingest(zSrc)
+    ZOrderLayout.appendDeltaLineitem(spark, zSrc, delta)
+    val hSrc = tempSource(base)
+    val hLoc = HilbertLayout.ensureLineitem3(spark, hSrc)
+    ingest(hSrc)
+    HilbertLayout.appendDeltaLineitem3(spark, hSrc, delta)
+    for ((loc, cols) <- Seq(bLoc -> Seq("l_orderkey"),
+                            zLoc -> ZOrderLayout.StatsCols,
+                            hLoc -> HilbertLayout.StatsCols)) {
+      val kept = manifestLines(loc)
+      assert(kept.size > 1)
+      assert(kept == rebuiltLines(loc, cols), s"kept manifest differs at $loc")
+    }
+  }
+
+  test("refresh re-reads a same-named file whose size changed and drops a removed one") {
+    val li = Tables.lineitem(spark, sf)
+    val dir = Files.createTempDirectory("graft_manifest_edit").toString + "/t"
+    li.repartition(4).write.parquet(dir)
+    assert(StatsManifest.write(spark, dir, Seq("l_orderkey")) ==
+      StatsManifest.Refresh(0, 4))
+    val Seq(changed, removed, _, _) = StatsManifest.read(dir).get.map(_.name)
+    // same name, different content and size (its checksum sidecar goes
+    // too: the local file system verifies it on read)
+    val other = Files.createTempDirectory("graft_manifest_other").toString + "/t"
+    li.limit(10).coalesce(1).write.parquet(other)
+    val replacement = new java.io.File(other).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val target = Paths.get(s"$dir/$changed")
+    assert(replacement.length != Files.size(target))
+    Files.move(replacement.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(Paths.get(s"$dir/.$changed.crc"))
+    Files.delete(Paths.get(s"$dir/$removed"))
+    Files.deleteIfExists(Paths.get(s"$dir/.$removed.crc"))
+    assert(StatsManifest.write(spark, dir, Seq("l_orderkey")) ==
+      StatsManifest.Refresh(2, 1))
+    val entries = StatsManifest.read(dir).get
+    assert(entries.map(_.name).toSet.size == 3 && !entries.exists(_.name == removed))
+    assert(entries.find(_.name == changed).get.rows == 10)
+    assert(manifestLines(dir) == rebuiltLines(dir, Seq("l_orderkey")))
+  }
+
+  test("O(delta) tripwire: a refresh after an append reads exactly the added files' footers") {
+    val li = Tables.lineitem(spark, sf)
+    for (n <- Seq(6, 20)) {
+      val dir = Files.createTempDirectory("graft_manifest_odelta").toString + "/t"
+      li.repartition(n).write.parquet(dir)
+      assert(StatsManifest.write(spark, dir, Seq("l_orderkey")) ==
+        StatsManifest.Refresh(0, n))
+      li.limit(300).repartition(3).write.mode("append").parquet(dir)
+      assert(StatsManifest.write(spark, dir, Seq("l_orderkey")) ==
+        StatsManifest.Refresh(n, 3), s"append onto $n files")
+      // nothing changed: nothing read, no job
+      assert(StatsManifest.write(spark, dir, Seq("l_orderkey")) ==
+        StatsManifest.Refresh(n + 3, 0))
+    }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.ZOrderLayout
+import graft.sources.{HilbertLayout, ZOrderLayout}
 
 /** The z-ordered layout must be value-faithful to the source table AND
   * carry footer stats selective on BOTH clustering dimensions — the
@@ -58,7 +58,7 @@ class ZOrderLayoutSpec extends AnyFunSuite {
     val nFiles = 16
     val zDir = java.nio.file.Files.createTempDirectory("graft_zord").toString + "/li"
     ZOrderLayout.writeZOrdered(li, col("l_partkey"),
-      ZOrderLayout.dayOf(col("l_shipdate")), zDir, nFiles)
+      ZOrderLayout.dayOf(col("l_shipdate")), zDir, _ => nFiles)
     // the comparison twin: same file count, clustered on ship date ONLY
     val sDir = java.nio.file.Files.createTempDirectory("graft_sort").toString + "/li"
     val conf = spark.conf
@@ -111,5 +111,29 @@ class ZOrderLayoutSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val got = df.collect().map(r => (r.getString(0), r.getLong(3))).toMap
     assert(got == expect && got.nonEmpty)
+  }
+
+  test("concurrent z-order and Hilbert writes leave the session's timestamp type as found") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val before = spark.conf.get(tsKey)
+    val li = Tables.lineitem(spark, sf)
+    val out = java.nio.file.Files.createTempDirectory("graft_ts_scope").toString
+    for (round <- 0 until 4) {
+      val writes = Seq(
+        Future(ZOrderLayout.writeZOrdered(li, col("l_partkey"),
+          ZOrderLayout.dayOf(col("l_shipdate")), s"$out/z$round", _ => 4)),
+        Future(HilbertLayout.writeHilbert(li,
+          Seq(col("l_partkey"), ZOrderLayout.dayOf(col("l_shipdate")),
+              col("l_suppkey")), s"$out/h$round", _ => 4)))
+      writes.foreach(Await.result(_, 5.minutes))
+      assert(spark.conf.get(tsKey) == before,
+        s"round $round left $tsKey at ${spark.conf.get(tsKey)}, found $before")
+      // both writes ran inside the scope: ship dates carry footer stats
+      for (d <- Seq(s"$out/z$round", s"$out/h$round"))
+        assert(fileRanges(d, "l_shipdate").nonEmpty, s"no timestamp stats in $d")
+    }
   }
 }

@@ -176,7 +176,8 @@ object Tables {
     * by width/buckets and the forced SHUFFLE_HASH could hit the exact
     * "Can't acquire bytes" OOM this gate exists to prevent — precisely
     * at the large scales where the layout gate engages. Callers on a
-    * bucketed source pass Some(BucketedLayout.Buckets). */
+    * bucketed source pass the layout's count,
+    * Some(BucketedLayout.bucketsFor(...)). */
   def shuffleHashIfFits(s: SparkSession, buildRows: Long, rowBytes: Long,
                         df: DataFrame,
                         fixedWidth: Option[Int] = None): DataFrame = {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import graft.Tables._
 import graft.Tuning.BoundedSortOps
 import graft.Num._
+import graft.sources.BucketedLayout
 
 /** Core relational operator inventory (SURVEY.md §2) re-expressed Spark-first
   * on the TPC-H-ish star at /root/testdata.
@@ -159,18 +160,17 @@ object Relational {
     * below that the fixed bucket-task granularity costs more than the
     * (tiny) shuffle it saves. Crossover data: sf1 0.75×, sf10 1.22×,
     * sf30 1.84× → threshold Buckets × 32 MB of fact bytes sits between
-    * the decades where the sign flips. */
+    * the decades where the sign flips. That term is the layout's own
+    * sizing rule: the gate engages exactly when the derived bucket count
+    * (BucketedLayout.bucketsFor — per-bucket minimum
+    * `graft.bucketed.minBucketBytes`, default 32 MB; the gate spec drives
+    * the bucketed branch at test scale through it) reaches Buckets. */
   private[operators] def liPart(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    // per-bucket minimum is an ops knob (default 32 MB); the gate spec
-    // drives the bucketed branch at test scale through it
-    val minBucketBytes =
-      s.conf.get("graft.bucketed.minBucketBytes", (32L << 20).toString).toLong
-    val bucketsPay = graft.Tables.tableBytes(d, "lineitem") >=
-      graft.sources.BucketedLayout.Buckets.toLong * minBucketBytes
+    val bucketsPay = BucketedLayout.bucketsFor(s, d, "l_partkey") == BucketedLayout.Buckets
     if (graft.Tables.fitsBroadcast(s, d, "part", rowBytes = 160) || !bucketsPay)
       (lineitem(s, d), partB(s, d))
     else {
-      val (li, pt) = graft.sources.BucketedLayout.ensure(s, d)
+      val (li, pt) = BucketedLayout.ensure(s, d)
       (s.table(li), s.table(pt))
     }
   }
@@ -189,17 +189,14 @@ object Relational {
     * measured 32 MB crossover as liPart; below it the fixed 32-task
     * granularity costs more than the small shuffle it saves — and at gate
     * scales AQE right-sizes the plain exchanges, which is exactly the
-    * behavior the plain branch keeps). Returns None at gate scales so the
-    * plain paths stay bit-identical to rounds ≤11. */
+    * behavior the plain branch keeps): engaged exactly when the derived
+    * count (BucketedLayout.bucketsFor) reaches Buckets. Returns None at
+    * gate scales so the plain paths stay bit-identical to rounds ≤11. */
   private[operators] def liOrdersBucketed(
       s: SparkSession, d: String): Option[(DataFrame, DataFrame)] = {
-    val minBucketBytes =
-      s.conf.get("graft.bucketed.minBucketBytes", (32L << 20).toString).toLong
-    val bucketsPay = graft.Tables.tableBytes(d, "lineitem") >=
-      graft.sources.BucketedLayout.Buckets.toLong * minBucketBytes
-    if (!bucketsPay) None
+    if (BucketedLayout.bucketsFor(s, d, "l_orderkey") < BucketedLayout.Buckets) None
     else {
-      val (li, od) = graft.sources.BucketedLayout.ensureOrderkey(s, d)
+      val (li, od) = BucketedLayout.ensureOrderkey(s, d)
       Some((s.table(li), s.table(od)))
     }
   }
@@ -220,20 +217,17 @@ object Relational {
     * above the geometric midpoint (orders is ~¼ of lineitem per decade,
     * which is why this family's threshold is ~¼ of liPart's measured
     * 32 MB). Family-specific knob first, the shared knob as fallback so
-    * the forced-gate Verify run drives this branch too. */
+    * the forced-gate Verify run drives this branch too; both are read by
+    * the one sizing rule, BucketedLayout.bucketsFor, and the second term
+    * holds exactly when its derived count reaches Buckets. */
   private[operators] def ordersCustBucketed(
       s: SparkSession, d: String): Option[(DataFrame, DataFrame)] = {
-    val minBucketBytes =
-      s.conf.get("graft.bucketed.custkey.minBucketBytes",
-                 s.conf.get("graft.bucketed.minBucketBytes",
-                            (4L << 20).toString)).toLong
-    val bucketsPay = graft.Tables.tableBytes(d, "orders") >=
-      graft.sources.BucketedLayout.Buckets.toLong * minBucketBytes
+    val bucketsPay = BucketedLayout.bucketsFor(s, d, "o_custkey") == BucketedLayout.Buckets
     if (graft.Tables.fitsBroadcast(s, d, "customer", rowBytes = 160) ||
         !bucketsPay) None
     else Some((
-      s.table(graft.sources.BucketedLayout.ensureTable(s, d, "orders", "o_custkey")),
-      s.table(graft.sources.BucketedLayout.ensureTable(s, d, "customer", "c_custkey"))))
+      s.table(BucketedLayout.ensureTable(s, d, "orders", "o_custkey")),
+      s.table(BucketedLayout.ensureTable(s, d, "customer", "c_custkey"))))
   }
 
   /** Partkey-grain fact-aggregate source (q12/q14): both group BARE
@@ -242,15 +236,11 @@ object Relational {
     * family — runs the aggregation in the scan stage (zero exchanges
     * before the slim post-agg rows). Single-term gate, liOrdersBucketed's
     * reasoning: the group-by exchange exists regardless of the dim
-    * broadcast, so only the per-bucket-chunk condition matters. */
+    * broadcast, so only the per-bucket-chunk condition matters — the
+    * derived count (BucketedLayout.bucketsFor) reaching Buckets. */
   private[operators] def liByPartkey(s: SparkSession, d: String): Option[DataFrame] = {
-    val minBucketBytes =
-      s.conf.get("graft.bucketed.minBucketBytes", (32L << 20).toString).toLong
-    val bucketsPay = graft.Tables.tableBytes(d, "lineitem") >=
-      graft.sources.BucketedLayout.Buckets.toLong * minBucketBytes
-    if (!bucketsPay) None
-    else Some(s.table(
-      graft.sources.BucketedLayout.ensureTable(s, d, "lineitem", "l_partkey")))
+    if (BucketedLayout.bucketsFor(s, d, "l_partkey") < BucketedLayout.Buckets) None
+    else Some(s.table(BucketedLayout.ensureTable(s, d, "lineitem", "l_partkey")))
   }
 
   val q4_brand_revenue: Q = (s, d) => {
@@ -275,7 +265,7 @@ object Relational {
     * physical layout differs. Plan pinned in BucketedLayoutSpec; the
     * scale A/B factor is recorded in EXPLAIN_r11. */
   val q73_bucketed_brand_revenue: Q = (s, d) => {
-    val (li, pt) = graft.sources.BucketedLayout.ensure(s, d)
+    val (li, pt) = BucketedLayout.ensure(s, d)
     s.table(li)
       .join(s.table(pt), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
@@ -432,10 +422,10 @@ object Relational {
     val bucketedPair = liOrdersBucketed(s, d)
     val (liSrc, odSrc) = bucketedPair
       .getOrElse((lineitem(s, d), orders(s, d)))
-    // co-partitioned bucketed join executes at exactly Buckets tasks (no
-    // exchange → no AQE coalescing): size the SHJ build against that
-    // width, not the session shuffle width
-    val shjWidth = bucketedPair.map(_ => graft.sources.BucketedLayout.Buckets)
+    // co-partitioned bucketed join executes at exactly the layout's bucket
+    // count (no exchange → no AQE coalescing): size the SHJ build against
+    // that width, not the session shuffle width
+    val shjWidth = bucketedPair.map(_ => BucketedLayout.bucketsFor(s, d, "l_orderkey"))
     // project the ship DAY once per row (round 18, §4): the aggregate
     // children each re-evaluated cast-to-date/unix_date (~5 conversions
     // per fact row inside the scan-fused partial agg); one projected long
@@ -586,22 +576,23 @@ object Relational {
   val q12_rank_parts: Q = (s, d) => {
     // aggregate BEFORE the dim join: revenue only needs lineitem columns
     // and p_partkey→p_name is functional, so grouping the fact alone and
-    // broadcast-joining the 1:1 dim onto the (eventually top-10) rows is
-    // result-identical (FK inner-join drops the same groups either way)
-    // and keeps the wide string column out of the 600k-row shuffle — the
-    // plan you want at 100 TB.
-    // PRECONDITION (FK integrity): ranking here runs over the bare fact
-    // aggregate, while the oracle joins part BEFORE ranking — an
-    // l_partkey absent from part would consume a rank slot on this side
-    // but be excluded pre-rank by the oracle. Equivalence rests on every
-    // l_partkey existing in part (true of the generated testdata and of
-    // any FK-clean warehouse); on a non-FK corpus move the join above
-    // `agg` (and pay the wide shuffle) or pre-filter to part's key set. The per-group sum runs in long e4 units
+    // joining the 1:1 dim onto the (eventually top-10) rows keeps the wide
+    // string column out of the 600k-row shuffle — the plan you want at
+    // 100 TB. The inner join's other effect, dropping groups whose
+    // l_partkey has no part row, must happen BEFORE ranking (such a group
+    // would otherwise take a rank slot and vanish after `rnk <= 10`), so
+    // the slim aggregate is semi-joined to part's key set first —
+    // broadcast while it fits. The per-group sum runs in long e4 units
     // (bounded per-part groups) and converts to the exact decimal at the
     // aggregate boundary — see revenueE4.
+    val partKeys = {
+      val k = part(s, d).select("p_partkey")
+      if (fitsBroadcast(s, d, "part", rowBytes = 24)) broadcast(k) else k
+    }
     val agg = liByPartkey(s, d).getOrElse(lineitem(s, d))
       .groupBy(col("l_partkey").as("p_partkey"))
       .agg(e4ToDecimal(sum(revenueE4)).as("rev_d"))
+      .join(partKeys, Seq("p_partkey"), "left_semi")
     // Two-phase top-k (round 10 audit): `RANK() ... <= 10` does NOT sort
     // the whole ~|part| aggregate on one partition — Catalyst's
     // InferWindowGroupLimit inserts a PARTIAL WindowGroupLimit (local
@@ -834,9 +825,9 @@ object Relational {
     val bucketedPair = liOrdersBucketed(s, d)
     val (liSrc, odSrc) = bucketedPair
       .getOrElse((lineitem(s, d), orders(s, d)))
-    // co-partitioned execution is fixed at Buckets tasks (no exchange →
-    // no AQE coalescing): size the SHJ build against that width
-    val shjWidth = bucketedPair.map(_ => graft.sources.BucketedLayout.Buckets)
+    // co-partitioned execution is fixed at the layout's bucket count (no
+    // exchange → no AQE coalescing): size the SHJ build against that width
+    val shjWidth = bucketedPair.map(_ => BucketedLayout.bucketsFor(s, d, "l_orderkey"))
     odSrc
       // SHUFFLE_HASH: the anti join only needs a key-set of the right
       // side — SMJ's two full sorts buy nothing here, and the build side
@@ -1452,11 +1443,6 @@ object Relational {
              / CAST(SUM(rev_d) OVER () AS DOUBLE) * 100 AS cum_pct
          FROM a ORDER BY n_name""",
 
-    // FK PRECONDITION: this SQL joins part BEFORE ranking; the Spark side
-    // ranks the bare fact aggregate and joins after `rnk <= 10` (see the
-    // q12 builder note). Hash parity rests on every l_partkey existing in
-    // part — true of the generated testdata; a non-FK corpus would shift
-    // rank slots between the two forms.
     "q12_rank_parts" ->
       s"""WITH pr AS (
            SELECT p_partkey, p_name, SUM($REV_SQL) AS rev_d

@@ -92,9 +92,11 @@ object Warehouse {
     val bucketedPair = graft.operators.Relational.liOrdersBucketed(s, d)
     val (liSrc, odSrc) = bucketedPair
       .getOrElse((lineitem(s, d), orders(s, d)))
-    // co-partitioned bucketed execution is fixed at Buckets tasks: size
-    // the SHJ build against that width (see Tables.shuffleHashIfFits)
-    val shjWidth = bucketedPair.map(_ => graft.sources.BucketedLayout.Buckets)
+    // co-partitioned bucketed execution is fixed at the layout's bucket
+    // count: size the SHJ build against that width (see
+    // Tables.shuffleHashIfFits)
+    val shjWidth = bucketedPair.map(_ =>
+      graft.sources.BucketedLayout.bucketsFor(s, d, "l_orderkey"))
     liSrc
       // fact-to-fact: SHUFFLE_HASH (see Relational.q6) -- orders is never
       // broadcastable next to lineitem at warehouse scale. A round-7

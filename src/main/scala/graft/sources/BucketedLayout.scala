@@ -65,9 +65,28 @@ import org.apache.spark.sql.functions.col
   * stamp, so merged ≡ rebuilt (spec-pinned by oracle hash in
   * BucketedIncrementSpec).
   *
-  * Bucket count is a layout-time choice: fixed here (content-addressed
-  * with the directory), while a deployment sizes it so a bucket's share
-  * of the FACT table stays a few hundred MB per task at target scale.
+  * Bucket count is sized to the data when the layout is built
+  * ([[bucketsFor]], the default of every `buckets` parameter): one bucket
+  * per row-group-scale share of the family's FACT — `lineitem` over
+  * `graft.bucketed.minBucketBytes` (32 MB) for the partkey and orderkey
+  * families, `orders` over `graft.bucketed.custkey.minBucketBytes` (4 MB,
+  * falling back to the shared setting) for custkey — rounded down to a
+  * power of two and clamped to [1, [[Buckets]]]. These are the thresholds
+  * the layout gates measured (a bucket pays only once it holds such a
+  * share, EXPLAIN_r11 §5 / EXPLAIN_r13 §3), so a gate engages exactly
+  * when the count reaches [[Buckets]] (`bytes ≥ Buckets × threshold`);
+  * below that no gated query reads the layout, and what still touches
+  * it (q73, the ingest appends, compaction) pays one file, footer and
+  * task per bucket the data can fill — a 1 MB fact is one bucket, not
+  * 32. Both layouts of a family share the fact, hence the count, and the
+  * count is part of the content address `(sfDir, table, key, count)`.
+  * CROSSING: when appends grow the fact past a power of two the derived
+  * count changes and [[appendDelta]] finds no layout at the new address;
+  * it then rebuilds through [[ensureTable]] at the new count (the source
+  * already holds the delta, by the append contract), and every build
+  * retires the copies of the same `(sfDir, table, key)` at the other
+  * powers of two (catalog table dropped, directory deleted). An explicit
+  * `buckets` argument still pins the count.
   *
   * RISK NOTE (round 14, VERDICT r13 #5): the sort-free merge joins ride
   * `spark.sql.legacy.bucketedTableScan.outputOrdering`, a legacy conf a
@@ -78,9 +97,53 @@ import org.apache.spark.sql.functions.col
   */
 object BucketedLayout {
 
+  /** Largest bucket count, and the count every gated plan reads. A power
+    * of two, so every derived count divides it. */
   val Buckets = 32
 
+  /** Default of every `buckets` parameter: derive the count from the
+    * family's fact ([[bucketsFor]]). */
+  val Derived = 0
+
+  /** The counts a layout can be derived at: the powers of two up to
+    * [[Buckets]]. */
+  private val Counts: Seq[Int] = Iterator.iterate(1)(_ * 2).takeWhile(_ <= Buckets).toSeq
+
   private val Root = "/root/repo/target/bucketed"
+
+  /** Bucket count for `factBytes` of fact at one bucket per
+    * `minBucketBytes`: the largest power of two ≤ max(1, factBytes /
+    * minBucketBytes), at most [[Buckets]]. It is [[Buckets]] exactly when
+    * `factBytes ≥ Buckets × minBucketBytes` (the layout gates' condition),
+    * and always when `minBucketBytes ≤ 0` (the forced-gate setting). */
+  def bucketCount(factBytes: Long, minBucketBytes: Long): Int =
+    if (minBucketBytes <= 0) Buckets
+    else math.min(Buckets.toLong,
+      java.lang.Long.highestOneBit(math.max(1L, factBytes / minBucketBytes))).toInt
+
+  /** The fact table and per-bucket byte threshold that size the family
+    * of `key`: the custkey pair by `orders` (custkey threshold, then the
+    * shared one, default 4 MB); every other key by `lineitem` (shared
+    * threshold, default 32 MB). */
+  private def sizing(s: SparkSession, key: String): (String, Long) = key match {
+    case "o_custkey" | "c_custkey" =>
+      ("orders", s.conf.get("graft.bucketed.custkey.minBucketBytes",
+        s.conf.get("graft.bucketed.minBucketBytes", (4L << 20).toString)).toLong)
+    case _ =>
+      ("lineitem", s.conf.get("graft.bucketed.minBucketBytes", (32L << 20).toString).toLong)
+  }
+
+  /** The derived bucket count of the layouts keyed by `key` over
+    * `sfDir` — the one decision the layout gates (Relational.liPart and
+    * its siblings: engaged iff this is [[Buckets]]), the bucketed
+    * shuffle-hash widths and every default `buckets` parameter share. */
+  def bucketsFor(s: SparkSession, sfDir: String, key: String): Int = {
+    val (fact, minBucketBytes) = sizing(s, key)
+    bucketCount(graft.Tables.tableBytes(sfDir, fact), minBucketBytes)
+  }
+
+  private def resolve(s: SparkSession, sfDir: String, key: String, buckets: Int): Int =
+    if (buckets == Derived) bucketsFor(s, sfDir, key) else buckets
 
   private def hash(seed: String, buckets: Int): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -157,6 +220,24 @@ object BucketedLayout {
               LOCATION '$loc'""")
   }
 
+  /** Copies of (sfDir, table, key) at the other derivable counts whose
+    * build completed. */
+  private def siblings(seed: String, table: String, buckets: Int): Seq[Int] =
+    Counts.filter(b => b != buckets &&
+      Files.exists(Paths.get(s"${locOf(hash(seed, b), table)}/_bkt_ok")))
+
+  /** Retire the copies of (sfDir, table, key) at every derivable count
+    * other than `buckets`: drop the catalog table, delete the directory
+    * (a count the data outgrew must not keep its space or its name). */
+  private def retireSiblings(s: SparkSession, seed: String, table: String,
+                             buckets: Int): Unit =
+    Counts.filter(_ != buckets).foreach { b =>
+      val h = hash(seed, b)
+      if (s.catalog.tableExists(nameOf(table, h)))
+        s.sql(s"DROP TABLE ${nameOf(table, h)}")
+      graft.Fs.deleteTree(Paths.get(s"$Root/$h"))
+    }
+
   /** Generic single-table ensure: `table` bucketed+sorted by `key`,
     * content-addressed by (sfDir, table, key, buckets) — one source table
     * can have several bucketed copies under DIFFERENT keys (lineitem by
@@ -165,11 +246,15 @@ object BucketedLayout {
     * files once per config; re-registers only on a fresh catalog;
     * REBUILDS when the source stamp no longer matches `_bkt_meta` (a
     * changed source must never serve a stale layout — incremental
-    * ingests advance the stamp through [[appendDelta]] instead). */
+    * ingests advance the stamp through [[appendDelta]] instead). The
+    * count defaults to the derived one ([[bucketsFor]]); building or
+    * registering at a count retires the copies at the other counts. */
   def ensureTable(s: SparkSession, sfDir: String, table: String,
-                  key: String, buckets: Int = Buckets): String = synchronized {
+                  key: String, buckets: Int = Derived): String = synchronized {
     vacuumLegacyOnce()
-    val h = hash(s"$sfDir|$table|$key", buckets)
+    val n = resolve(s, sfDir, key, buckets)
+    val seed = s"$sfDir|$table|$key"
+    val h = hash(seed, n)
     val name = nameOf(table, h)
     val loc = locOf(h, table)
     val stamp = sourceStamp(sfDir, table)
@@ -190,7 +275,7 @@ object BucketedLayout {
         readStamp(loc).contains(stamp)) {
       // files already on disk from a previous JVM and still current:
       // register only
-      registerDdl(s, name, key, buckets, loc)
+      registerDdl(s, name, key, n, loc)
       // manifest backfill for dirs persisted before StatsManifest existed
       if (!Files.exists(Paths.get(s"$loc/${StatsManifest.FileName}")))
         StatsManifest.write(s, loc, Seq(key))
@@ -201,15 +286,16 @@ object BucketedLayout {
         // pre-cluster by the bucketer's own hash → one bucket per
         // task → one file per bucket (tasks×buckets files otherwise,
         // the partitionBy lesson applied to bucketing)
-        .repartition(buckets, col(key))
+        .repartition(n, col(key))
         .write.mode("overwrite")
-        .bucketBy(buckets, key).sortBy(key)
+        .bucketBy(n, key).sortBy(key)
         .option("path", loc)
         .saveAsTable(name)
       StatsManifest.write(s, loc, Seq(key))
-      writeMeta(loc, sfDir, table, key, buckets, stamp)
+      writeMeta(loc, sfDir, table, key, n, stamp)
       Files.writeString(Paths.get(s"$loc/_bkt_ok"), "ok")
     }
+    retireSiblings(s, seed, table, n)
     name
   }
 
@@ -232,24 +318,36 @@ object BucketedLayout {
     * partitioning is per bucket ID regardless of files-per-bucket, and
     * bucket sort order was never assumed (module scaladoc). Run
     * [[compactBuckets]] periodically to fold delta files back to one per
-    * bucket. */
+    * bucket. When the fact has crossed a power of two since the layout
+    * was built, the derived count names an address with no layout while
+    * a copy at another count exists: the layout is rebuilt from the
+    * source at the new count instead ([[ensureTable]], which retires the
+    * old copy — the source already holds `delta`, by the contract
+    * above). */
   def appendDelta(s: SparkSession, sfDir: String, table: String,
                   key: String, delta: DataFrame,
-                  buckets: Int = Buckets): String = synchronized {
-    val h = hash(s"$sfDir|$table|$key", buckets)
+                  buckets: Int = Derived): String = synchronized {
+    val n = resolve(s, sfDir, key, buckets)
+    val seed = s"$sfDir|$table|$key"
+    val h = hash(seed, n)
     val name = nameOf(table, h)
     val loc = locOf(h, table)
-    require(Files.exists(Paths.get(s"$loc/_bkt_ok")),
-      s"appendDelta: no persisted layout at $loc — run ensureTable first " +
-        "(appending into a missing layout would silently build from the " +
-        "delta alone)")
+    if (!Files.exists(Paths.get(s"$loc/_bkt_ok"))) {
+      require(siblings(seed, table, n).nonEmpty,
+        s"appendDelta: no persisted layout at $loc — run ensureTable first " +
+          "(appending into a missing layout would silently build from the " +
+          "delta alone)")
+      System.err.println(
+        s"[bucketed] $table/$key now sizes to $n buckets: rebuilding from source")
+      return ensureTable(s, sfDir, table, key, n)
+    }
     finishPendingCompact(loc)
-    if (!s.catalog.tableExists(name)) registerDdl(s, name, key, buckets, loc)
+    if (!s.catalog.tableExists(name)) registerDdl(s, name, key, n, loc)
     delta
-      .repartition(appendWidth(buckets,
+      .repartition(appendWidth(n,
         s.conf.get("spark.sql.shuffle.partitions").toInt), col(key))
       .write.mode("append")
-      .bucketBy(buckets, key).sortBy(key)
+      .bucketBy(n, key).sortBy(key)
       .option("path", loc)
       .saveAsTable(name)
     StatsManifest.write(s, loc, Seq(key))
@@ -275,12 +373,12 @@ object BucketedLayout {
         "source (never advancing a stamp over a diverged layout).")
       s.sql(s"DROP TABLE IF EXISTS $name")
       graft.Fs.deleteTree(Paths.get(loc))
-      return ensureTable(s, sfDir, table, key, buckets)
+      return ensureTable(s, sfDir, table, key, n)
     }
     // stamp AFTER the data: a crash between the append and this line
     // leaves the stamp stale → next ensureTable rebuilds (never serves a
     // half-appended layout as current)
-    writeMeta(loc, sfDir, table, key, buckets, sourceStamp(sfDir, table))
+    writeMeta(loc, sfDir, table, key, n, sourceStamp(sfDir, table))
     s.catalog.refreshTable(name)
     name
   }
@@ -304,11 +402,12 @@ object BucketedLayout {
     * deciding "when" by hand. Returns Some((before, after)) when a
     * compaction ran, None when the census is under the bound. */
   def maintain(s: SparkSession, sfDir: String, table: String, key: String,
-               buckets: Int = Buckets): Option[(Int, Int)] = {
+               buckets: Int = Derived): Option[(Int, Int)] = {
     val bound = s.conf.getOption("graft.bucketed.maxFilesPerBucket")
       .map(_.toInt).getOrElse(4)
-    if (maxFilesPerBucket(s, sfDir, table, key, buckets) > bound)
-      Some(compactBuckets(s, sfDir, table, key, buckets))
+    val n = resolve(s, sfDir, key, buckets)
+    if (maxFilesPerBucket(s, sfDir, table, key, n) > bound)
+      Some(compactBuckets(s, sfDir, table, key, n))
     else None
   }
 
@@ -322,8 +421,9 @@ object BucketedLayout {
 
   /** Data files per layout — specs and the maintenance A/B read it. */
   def fileCount(s: SparkSession, sfDir: String, table: String, key: String,
-                buckets: Int = Buckets): Int =
-    dataFiles(locOf(hash(s"$sfDir|$table|$key", buckets), table)).size
+                buckets: Int = Derived): Int =
+    dataFiles(locOf(hash(s"$sfDir|$table|$key",
+      resolve(s, sfDir, key, buckets)), table)).size
 
   // bucket id rides in the file name: part-00000-<uuid>_00031.c000...
   private val bucketIdRe = "_(\\d{5})\\.".r
@@ -338,8 +438,9 @@ object BucketedLayout {
 
   /** Max files held by any single bucket (0 on an empty layout). */
   def maxFilesPerBucket(s: SparkSession, sfDir: String, table: String,
-                        key: String, buckets: Int = Buckets): Int = {
-    val c = bucketFileCounts(locOf(hash(s"$sfDir|$table|$key", buckets), table))
+                        key: String, buckets: Int = Derived): Int = {
+    val c = bucketFileCounts(locOf(hash(s"$sfDir|$table|$key",
+      resolve(s, sfDir, key, buckets)), table))
     if (c.isEmpty) 0 else c.values.max
   }
 
@@ -383,9 +484,10 @@ object BucketedLayout {
     * appended by result hash and re-pins the zero-Exchange plans.
     * Returns (files before, files after). No-op when already compact. */
   def compactBuckets(s: SparkSession, sfDir: String, table: String,
-                     key: String, buckets: Int = Buckets): (Int, Int) =
+                     key: String, buckets: Int = Derived): (Int, Int) =
     synchronized {
-      val h = hash(s"$sfDir|$table|$key", buckets)
+      val n = resolve(s, sfDir, key, buckets)
+      val h = hash(s"$sfDir|$table|$key", n)
       val name = nameOf(table, h)
       val loc = locOf(h, table)
       finishPendingCompact(loc)
@@ -397,7 +499,7 @@ object BucketedLayout {
       // bucket sort-free fast path would never re-engage
       if (bucketFileCounts(loc).valuesIterator.forall(_ <= 1))
         return (before.size, before.size)
-      if (!s.catalog.tableExists(name)) registerDdl(s, name, key, buckets, loc)
+      if (!s.catalog.tableExists(name)) registerDdl(s, name, key, n, loc)
       val tmpLoc = s"$loc/.compact_tmp"
       val tmpName = s"${name}_compact"
       val confKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
@@ -407,7 +509,7 @@ object BucketedLayout {
         s.sql(s"DROP TABLE IF EXISTS $tmpName")
         s.table(name)
           .write.mode("overwrite")
-          .bucketBy(buckets, key).sortBy(key)
+          .bucketBy(n, key).sortBy(key)
           .option("path", tmpLoc)
           .saveAsTable(tmpName)
         s.sql(s"DROP TABLE $tmpName") // external: files stay under tmpLoc
@@ -430,18 +532,22 @@ object BucketedLayout {
     }
 
   /** Ensure the (lineitem, part) pair for `sfDir` exists bucketed by the
-    * partkey; returns the catalog table names. */
+    * partkey, both at one count; returns the catalog table names. */
   def ensure(s: SparkSession, sfDir: String,
-             buckets: Int = Buckets): (String, String) =
-    (ensureTable(s, sfDir, "lineitem", "l_partkey", buckets),
-     ensureTable(s, sfDir, "part", "p_partkey", buckets))
+             buckets: Int = Derived): (String, String) = {
+    val n = resolve(s, sfDir, "l_partkey", buckets)
+    (ensureTable(s, sfDir, "lineitem", "l_partkey", n),
+     ensureTable(s, sfDir, "part", "p_partkey", n))
+  }
 
   /** Ensure the (lineitem, orders) pair for `sfDir` exists bucketed by the
     * ORDER key — the second join/agg family's co-location (q2/q6/q19/q20/
     * q28 all shuffle lineitem and/or orders on the orderkey; see
     * Relational.liOrdersBucketed for the gate). */
   def ensureOrderkey(s: SparkSession, sfDir: String,
-                     buckets: Int = Buckets): (String, String) =
-    (ensureTable(s, sfDir, "lineitem", "l_orderkey", buckets),
-     ensureTable(s, sfDir, "orders", "o_orderkey", buckets))
+                     buckets: Int = Derived): (String, String) = {
+    val n = resolve(s, sfDir, "l_orderkey", buckets)
+    (ensureTable(s, sfDir, "lineitem", "l_orderkey", n),
+     ensureTable(s, sfDir, "orders", "o_orderkey", n))
+  }
 }

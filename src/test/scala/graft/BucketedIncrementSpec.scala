@@ -32,6 +32,11 @@ class BucketedIncrementSpec extends AnyFunSuite {
 
   private def li = Tables.lineitem(spark, sf)
 
+  // the multi-bucket mechanics (per-bucket compaction, write widths that
+  // divide the count) are pinned at the full count: the sf0.001 fact
+  // alone derives one bucket (BucketSizingSpec)
+  private val B = BucketedLayout.Buckets
+
   // split the sf0.001 lineitem into a base (~90%) and a delta (~10%)
   private def base = li.filter(col("l_orderkey") % 10 =!= 0)
   private def delta = li.filter(col("l_orderkey") % 10 === 0)
@@ -70,10 +75,10 @@ class BucketedIncrementSpec extends AnyFunSuite {
 
   test("gated plan stays exchange-free over multi-file buckets; compaction folds and preserves") {
     val src = freshSource("compact", base)
-    val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
+    val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey", buckets = B)
     delta.write.mode("append").parquet(s"$src/lineitem.parquet")
     Tables.clearCaches()
-    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta)
+    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta, buckets = B)
     // the layout's reason to exist: orderkey-grain aggregation runs in
     // the scan stage — with DELTA FILES PRESENT (multi-file buckets)
     def agg = layoutDf(name).groupBy("l_orderkey")
@@ -94,7 +99,7 @@ class BucketedIncrementSpec extends AnyFunSuite {
     val before = agg.collect().toSeq.sortBy(_.getLong(0))
     // fold back to one file per bucket — no shuffle, values unchanged
     val (nBefore, nAfter) =
-      BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey")
+      BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey", buckets = B)
     assert(nBefore > BucketedLayout.Buckets)
     assert(nAfter <= BucketedLayout.Buckets, s"compacted to $nAfter files")
     assert(agg.collect().toSeq.sortBy(_.getLong(0)) == before)
@@ -102,7 +107,7 @@ class BucketedIncrementSpec extends AnyFunSuite {
     assert(compactedPlan.contains("Bucketed: true"))
     assert(!compactedPlan.contains("Exchange hashpartitioning"))
     // idempotent: already-compact is a no-op
-    assert(BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey")
+    assert(BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey", buckets = B)
       == ((nAfter, nAfter)))
   }
 
@@ -199,22 +204,22 @@ class BucketedIncrementSpec extends AnyFunSuite {
     val sBase = sparse.filter(col("l_linenumber") % 2 === 0)
     val sDelta = sparse.filter(col("l_linenumber") % 2 =!= 0)
     val src = freshSource("sparse", sBase)
-    val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
+    val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey", buckets = B)
     sDelta.write.mode("append").parquet(s"$src/lineitem.parquet")
     Tables.clearCaches()
-    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", sDelta)
-    val files = BucketedLayout.fileCount(spark, src, "lineitem", "l_orderkey")
+    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", sDelta, buckets = B)
+    val files = BucketedLayout.fileCount(spark, src, "lineitem", "l_orderkey", buckets = B)
     assert(files <= BucketedLayout.Buckets,
       s"precondition: sparse layout must stay under Buckets files ($files)")
     assert(BucketedLayout.maxFilesPerBucket(
-      spark, src, "lineitem", "l_orderkey") > 1)
+      spark, src, "lineitem", "l_orderkey", buckets = B) > 1)
     val expect = allRows(layoutDf(name))
     val (nBefore, nAfter) =
-      BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey")
+      BucketedLayout.compactBuckets(spark, src, "lineitem", "l_orderkey", buckets = B)
     assert(nBefore == files && nAfter < nBefore,
       s"sparse multi-file buckets must fold ($nBefore -> $nAfter)")
     assert(BucketedLayout.maxFilesPerBucket(
-      spark, src, "lineitem", "l_orderkey") == 1)
+      spark, src, "lineitem", "l_orderkey", buckets = B) == 1)
     assert(allRows(layoutDf(name)) == expect)
   }
 
@@ -264,17 +269,17 @@ class BucketedIncrementSpec extends AnyFunSuite {
     // bucket must still land in exactly one task
     val oracleSrc = freshSource("width_oracle", base.union(delta))
     val oracle = allRows(layoutDf(
-      BucketedLayout.ensureTable(spark, oracleSrc, "lineitem", "l_orderkey")))
+      BucketedLayout.ensureTable(spark, oracleSrc, "lineitem", "l_orderkey", buckets = B)))
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     try for (width <- Seq(3, 4, 8, 200)) {
       spark.conf.set(key, width.toString)
       val src = freshSource(s"width_$width", base)
-      val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
+      val name = BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey", buckets = B)
       val before = filesPerBucket(locOf(name))
       delta.write.mode("append").parquet(s"$src/lineitem.parquet")
       Tables.clearCaches()
-      BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta)
+      BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta, buckets = B)
       val after = filesPerBucket(locOf(name))
       assert(after.values.sum > before.values.sum, s"width $width: no delta file")
       for ((b, n) <- after)

@@ -12,7 +12,9 @@ class BucketedLayoutSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
   test("bucketed join is exchange-free; the plain-table twin is not") {
-    val (li, pt) = BucketedLayout.ensure(spark, sf)
+    // pinned at the full count (the sf0.001 fact alone derives one
+    // bucket): the sort-free SMJ guard is about many sorted buckets
+    val (li, pt) = BucketedLayout.ensure(spark, sf, buckets = BucketedLayout.Buckets)
     // force sort-merge (the strategy that engages past the broadcast
     // budget — at test scale the planner would broadcast and trivially
     // skip the exchange this spec is about)
@@ -38,7 +40,7 @@ class BucketedLayoutSpec extends AnyFunSuite {
   }
 
   test("one file per bucket (write pre-clustered by the bucket hash)") {
-    val (li, _) = BucketedLayout.ensure(spark, sf)
+    val (li, _) = BucketedLayout.ensure(spark, sf, buckets = BucketedLayout.Buckets)
     val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $li")
       .filter(col("col_name") === "Location").select("data_type").head.getString(0)
     val files = new java.io.File(loc.stripPrefix("file:"))

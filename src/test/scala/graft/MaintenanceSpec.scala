@@ -37,8 +37,11 @@ class MaintenanceSpec extends AnyFunSuite {
     val delta = li.filter(col("l_orderkey") % 10 === 0)
     base.write.mode("overwrite").parquet(s"$src/lineitem.parquet")
     Tables.clearCaches()
-    // present families: one bucketed pair + both curves + the Item tree
-    BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey")
+    // present families: one bucketed pair + both curves + the Item tree;
+    // the bucketed one at the full count (the sf0.001 fact alone derives
+    // one bucket), which the tick below derives through the threshold
+    BucketedLayout.ensureTable(spark, src, "lineitem", "l_orderkey",
+      buckets = BucketedLayout.Buckets)
     ZOrderLayout.ensureLineitem(spark, src)
     HilbertLayout.ensureLineitem3(spark, src)
     val csv = "/root/reference/Sample - Superstore.csv"
@@ -52,7 +55,8 @@ class MaintenanceSpec extends AnyFunSuite {
     delta.write.mode("append").parquet(s"$src/lineitem.parquet")
     Tables.clearCaches()
     val fresh = Tables.lineitem(spark, src).filter(col("l_orderkey") % 10 === 0)
-    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta)
+    BucketedLayout.appendDelta(spark, src, "lineitem", "l_orderkey", delta,
+      buckets = BucketedLayout.Buckets)
     ZOrderLayout.appendDeltaLineitem(spark, src, delta)
     HilbertLayout.appendDeltaLineitem3(spark, src, delta)
     val _ = fresh
@@ -64,6 +68,7 @@ class MaintenanceSpec extends AnyFunSuite {
     spark.conf.set("graft.cluster.maxProbeBloat", "1.0")
     spark.conf.set("graft.partitioned.maxFilesPerPartition", "1")
     try {
+      spark.conf.set("graft.bucketed.minBucketBytes", "0")
       val actions = Maintenance.tick(spark, src, Some(itemDir))
       val byTarget = actions.map(a => s"${a.family}:${a.target}" -> a).toMap
       assert(byTarget("bucketed:lineitem/l_orderkey").fired)
@@ -86,6 +91,7 @@ class MaintenanceSpec extends AnyFunSuite {
       val entries = StatsManifest.read(s"$itemDir/Item_by_year")
       assert(entries.isDefined && entries.get.map(_.rows).sum == item.count())
     } finally {
+      spark.conf.unset("graft.bucketed.minBucketBytes")
       spark.conf.unset("graft.bucketed.maxFilesPerBucket")
       spark.conf.unset("graft.cluster.maxProbeBloat")
       spark.conf.unset("graft.partitioned.maxFilesPerPartition")

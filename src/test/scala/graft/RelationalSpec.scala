@@ -204,4 +204,33 @@ class RelationalSpec extends AnyFunSuite {
       col("o_orderkey") === col("l_orderkey"), "left_semi").count()
     assert(noItems + withItems == orders)
   }
+
+  test("q12 ranks only parts that exist: a top l_partkey missing from part takes no rank slot") {
+    // fixture: the full lineitem with part minus the top-revenue part, so
+    // the foreign key is broken exactly where the ranking starts
+    val li = Tables.lineitem(spark, sf)
+    val rev = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
+    val top = li.groupBy("l_partkey").agg(expr(s"SUM($rev)").as("r"))
+      .orderBy(desc("r")).head().get(0)
+    val d = java.nio.file.Files.createTempDirectory("graft_q12_fk").toString
+    li.write.parquet(s"$d/lineitem.parquet")
+    Tables.part(spark, sf).filter(col("p_partkey") =!= lit(top))
+      .write.parquet(s"$d/part.parquet")
+    Tables.table(spark, d, "lineitem").createOrReplaceTempView("q12_fk_lineitem")
+    Tables.table(spark, d, "part").createOrReplaceTempView("q12_fk_part")
+    // the oracle's form: join part BEFORE ranking
+    val expect = spark.sql(
+      s"""WITH pr AS (
+            SELECT p_partkey, p_name, SUM($rev) AS rev_d
+            FROM q12_fk_lineitem JOIN q12_fk_part ON l_partkey = p_partkey
+            GROUP BY p_partkey, p_name),
+          r AS (
+            SELECT CAST(RANK() OVER (ORDER BY rev_d DESC) AS INT) AS rnk,
+              p_partkey, p_name, CAST(rev_d AS DOUBLE) AS revenue
+            FROM pr)
+          SELECT * FROM r WHERE rnk <= 10 ORDER BY rnk, p_partkey""").collect().toSeq
+    val got = Relational.q12_rank_parts(spark, d).collect().toSeq
+    assert(expect.size >= 10)
+    assert(got == expect)
+  }
 }
